@@ -103,7 +103,9 @@ object StreamingRunner {
     * execute, commit outcomes idempotently, then retire the wave —
     * [[graft.store.connector.WorkQueueLedger.markDone]] (one itemID-only
     * idempotent commit) followed by a manifest-only
-    * [[graft.store.connector.WorkQueueLedger.release]]. Every step after
+    * [[graft.store.connector.WorkQueueLedger.release]]; a batch that
+    * wins nothing only lands its outcome marker
+    * ([[ItemStore.commitEmptyBatch]]). Every step after
     * the outcome commit is tag-idempotent, and a replayed batch that
     * finds its outcomes already committed FINISHES the retirement
     * instead of skipping it, so a crash in any window (after claim /
@@ -231,56 +233,63 @@ object StreamingRunner {
         val todo = batch.filter(col("itemState") === "todo").select("itemID")
         val won = WorkQueueLedger.claim(spark, ledgerPath,
           WorkQueueLedger.notDone(spark, done, todo), instanceId, tag)
-        // post-claim done re-check: the pre-claim notDone and another
-        // dispatcher's retire can interleave (their markDone→release gap)
-        // so a just-finished id can win a fresh claim here. Once WE hold
-        // the claim nobody else can retire those ids, and any competing
-        // markDone committed BEFORE its release, which preceded our
-        // successful CAS — so its done commit both advanced the done
-        // version past `doneV0` AND is visible to this re-check;
-        // dropping the id closes the race completely.
-        val exec =
-          if (graft.store.VersionedTable.latestVersion(spark, done) == doneV0)
-            won
-          else WorkQueueLedger.notDone(spark, done, won)
-        val claimed = batch.join(exec, Seq("itemID"), "left_semi")
-        val (updated, outcomes) = Runner.processItems(claimed, config)
-        // split the win set by OUTCOME while the task cache is still
-        // live (materializing after unpersist would re-fork every
-        // script): retirable = executed ids minus those whose updated
-        // row STILL yields a claimable task — i.e. budget-skipped work.
-        // Without a budget there IS no skip path (every claimed task
-        // runs to a terminal row, scriptless rows have no tasks), so the
-        // split is skipped entirely — the steady trigger path pays zero
-        // extra jobs for the budget fix.
-        val retirable =
-          if (config.budgetSeconds.isEmpty) exec
-          else graft.plans.Lineage.cut(
-            exec.select("itemID").join(
-              Runner.todoTasks(updated).toDF.select("itemID").distinct(),
-              Seq("itemID"), "left_anti"))
-        try {
-          // pre-commit ownership check (takeover mode only): if a stale-
-          // heartbeat takeover released our wave while we ran, the thief
-          // owns these items' outcomes now — committing ours too would
-          // duplicate them under a second batch key
-          val stillOurs = takeoverMillis.isEmpty || won.isEmpty ||
-            WorkQueueLedger.entries(spark, ledgerPath)
-              .filter(col("tag") === tag).count() > 0
-          if (stillOurs)
-            ItemStore.commitBatch(
-              updated.select(WorkItem.schema.fieldNames.map(col): _*),
-              resultPath, batchKey)
-          if (stillOurs && !won.isEmpty) retire(retirable)
-        } finally { outcomes.unpersist(); () }
+        if (won.isEmpty)
+          // won nothing: no post-claim re-check, no execution, no outcome
+          // rows — only the batch marker, the end state commitBatch
+          // reaches from an empty frame, so a replay of this batch skips
+          ItemStore.commitEmptyBatch(spark, resultPath, batchKey)
+        else {
+          // post-claim done re-check: the pre-claim notDone and another
+          // dispatcher's retire can interleave (their markDone→release
+          // gap) so a just-finished id can win a fresh claim here. Once
+          // WE hold the claim nobody else can retire those ids, and any
+          // competing markDone committed BEFORE its release, which
+          // preceded our successful CAS — so its done commit both
+          // advanced the done version past `doneV0` AND is visible to
+          // this re-check; dropping the id closes the race completely.
+          val exec =
+            if (graft.store.VersionedTable.latestVersion(spark, done) == doneV0)
+              won
+            else WorkQueueLedger.notDone(spark, done, won)
+          val claimed = batch.join(exec, Seq("itemID"), "left_semi")
+          val (updated, outcomes) = Runner.processItems(claimed, config)
+          // split the win set by OUTCOME while the task cache is still
+          // live (materializing after unpersist would re-fork every
+          // script): retirable = executed ids minus those whose updated
+          // row STILL yields a claimable task — i.e. budget-skipped
+          // work. Without a budget there IS no skip path (every claimed
+          // task runs to a terminal row, scriptless rows have no tasks),
+          // so the split is skipped entirely — the steady trigger path
+          // pays zero extra jobs for the budget fix.
+          val retirable =
+            if (config.budgetSeconds.isEmpty) exec
+            else graft.plans.Lineage.cut(
+              exec.select("itemID").join(
+                Runner.todoTasks(updated).toDF.select("itemID").distinct(),
+                Seq("itemID"), "left_anti"))
+          try {
+            // pre-commit ownership check (takeover mode only): if a
+            // stale-heartbeat takeover released our wave while we ran,
+            // the thief owns these items' outcomes now — committing ours
+            // too would duplicate them under a second batch key
+            val stillOurs = takeoverMillis.isEmpty ||
+              WorkQueueLedger.entries(spark, ledgerPath)
+                .filter(col("tag") === tag).count() > 0
+            if (stillOurs) {
+              ItemStore.commitBatch(
+                updated.select(WorkItem.schema.fieldNames.map(col): _*),
+                resultPath, batchKey)
+              retire(retirable)
+            }
+          } finally { outcomes.unpersist(); () }
+          // the wave is retired — free its localCheckpoint blocks NOW so
+          // executor storage holds one in-flight wave, not the trigger
+          // history (the ContextCleaner would get there eventually; a
+          // thousand-trigger worker shouldn't wait on GC pressure)
+          graft.plans.Lineage.free(won)
+          graft.plans.Lineage.free(retirable)
+        }
         maintain()
-        // the wave is retired — free its localCheckpoint blocks NOW so
-        // executor storage holds one in-flight wave, not the trigger
-        // history (the ContextCleaner would get there eventually; a
-        // thousand-trigger worker shouldn't wait on GC pressure)
-        graft.plans.Lineage.free(won)
-        graft.plans.Lineage.free(retirable)
-        ()
       }
     }
 

@@ -9,17 +9,18 @@ import graft.store.ItemStore
 import graft.store.connector.{WorkQueueLedger, WorkQueueSource}
 
 /** Scale probe for MULTI-DISPATCHER contention over one ledger queue
-  * (r15 VERDICT task 6): the claim protocol serializes contending
-  * claimers on the table-version CAS — correctness is spec-proved (the
+  * (r15 VERDICT task 6): every claim wave publishes through the one
+  * table-version CAS — correctness is spec-proved (the
   * 4-contender race spec), but nothing MEASURED throughput vs dispatcher
   * count, so "dispatcher-per-queue" guidance had no number behind it.
   *
   * Shape: K streaming dispatchers (each its own checkpoint + instance,
   * all `--takeover`-less) drain ONE connector queue of `triggers` files x
   * `itemsPerTrigger` scriptless items concurrently. Every batch claims
-  * through the shared ledger; losers of the version CAS re-read and
-  * retry with backoff. Reported per K: wall seconds, items/s, CAS
-  * retries (from [[WorkQueueLedger.claimRetries]]), exactly-once
+  * through the shared ledger; a loser of the version CAS re-validates
+  * its already-written wave against only the claims that landed
+  * meanwhile and republishes it. Reported per K: wall seconds, items/s,
+  * lost CASes (from [[WorkQueueLedger.claimRetries]]), exactly-once
   * accounting (sum of result rows == items, done == items, ledger empty).
   *
   * Usage: runMain graft.probe.LedgerContentionProbe [triggers]

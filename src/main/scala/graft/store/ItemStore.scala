@@ -125,6 +125,20 @@ object ItemStore {
     true
   }
 
+  /** [[commitBatch]] of a batch with no rows: only the marker lands — the
+    * end state commitBatch reaches from an empty frame, without its
+    * staging write. Returns false when the batch was already committed.
+    */
+  def commitEmptyBatch(spark: SparkSession, path: String,
+      batchKey: String): Boolean = {
+    val marker = new Path(new Path(path), s"_graft_commits/batch-$batchKey")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(marker)) return false
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
+    true
+  }
+
   def load(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(WorkItem.schema).parquet(path)
 

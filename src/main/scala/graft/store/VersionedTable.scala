@@ -572,31 +572,39 @@ object VersionedTable {
     } catch { case _: TagAlreadyApplied => false }
   }
 
-  /** CONDITIONAL append: commit `df` as the child of EXACTLY
-    * `expectedParent` — one CAS attempt, NO rebase-and-retry. Returns
-    * false (leaving only unreferenced files for vacuum) when the table
-    * has advanced past `expectedParent`, when another committer wins the
-    * CAS, or when `tag` is already applied.
+  /** Step one of a CONDITIONAL commit: write `df` as data files of the
+    * table at `root` (building `parent`'s bloom columns) and return their
+    * entries with footer stats. Nothing references them until
+    * [[publishIfVersion]] wins; files never published are unreferenced
+    * leftovers for vacuum's grace-windowed sweep.
+    */
+  def writeFiles(root: String, df: DataFrame, parent: Snapshot): Seq[FileEntry] =
+    writeData(df, root, parent.bloomCols)
+
+  /** Step two: publish `files` (from [[writeFiles]]; none for a tag-only
+    * version) as the child of EXACTLY `parent` — one CAS attempt, NO
+    * rebase. Returns false when the table has advanced past `parent`,
+    * when another committer wins the CAS, or when `tag` is already
+    * applied; the files stay unreferenced and may be published again as
+    * the child of a newer parent.
     *
     * This is the read-validate-commit primitive ([[graft.store.connector.WorkQueueLedger]]'s
-    * claim waves): the caller derives `df` from its read of version
-    * `expectedParent`, so a successful commit PROVES the validation held
-    * against the exact state it was computed from — the DynamoDB
+    * claim waves): the caller validates `files` against its read of
+    * `parent`, so a won publish PROVES the validation held against the
+    * exact state it was computed from — the DynamoDB
     * `ConditionExpression` the reference's lock protocol lacked
-    * (`/root/reference/code/modifier.py:71-125`), at commit granularity.
-    * [[append]]'s rebase semantics would silently void the validation: a
-    * lost race re-parents the same rows onto a state the caller never
-    * read. Callers loop themselves: re-read, re-validate, re-attempt.
+    * (`code/modifier.py:71-125`), at commit granularity. [[append]]'s
+    * blind rebase would void the validation: a lost race re-parents the
+    * same rows onto a state the caller never read. Callers rebase
+    * themselves, re-validating against what landed since `parent`.
     */
-  def appendIfVersion(spark: SparkSession, root: String, df: DataFrame,
-      expectedParent: Long, tag: Option[String] = None): Boolean = {
+  def publishIfVersion(spark: SparkSession, root: String,
+      files: Seq[FileEntry], parent: Snapshot,
+      tag: Option[String] = None): Boolean = {
     val f = fs(spark, root)
-    val head = listVersions(f, root).lastOption
-    if (!head.contains(expectedParent)) return false
-    val parent = snapshot(spark, root, Some(expectedParent))
-    if (tag.exists(parent.tags.contains)) return false
-    val files = writeData(df, root, parent.bloomCols)
-    val v = expectedParent + 1
+    if (!listVersions(f, root).lastOption.contains(parent.version) ||
+        tag.exists(parent.tags.contains)) return false
+    val v = parent.version + 1
     val m = DeltaManifest(v, "append", parent.schema.json, files.toList,
       Nil, tag.toList, parent.bloomCols.toList)
     val won = casPublish(f, root, v, org.json4s.jackson.Serialization.write(m))

@@ -1,6 +1,6 @@
 package graft.store.connector
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.store.VersionedTable
@@ -23,14 +23,15 @@ import graft.store.VersionedTable
   * [[VersionedTable]] commit per micro-batch, holding one row per claimed
   * item `(itemID, instanceID, lockID, tag)`. Exactly-once across
   * contending dispatchers comes from read-validate-commit on the table
-  * version ([[VersionedTable.appendIfVersion]]): a claimer reads the
-  * ledger at version v, anti-joins the items already claimed, and commits
-  * its wave conditional on the parent still being v — a lost race re-reads
-  * and re-validates, so two dispatchers racing over the same queue files
-  * partition the items (no item is ever won twice; spec-asserted under a
-  * live thread race). Replay (foreachBatch is at-least-once) is the
-  * `tag`: a wave whose tag is already committed returns its ORIGINAL win
-  * set and appends nothing.
+  * version ([[VersionedTable.publishIfVersion]]): a claimer reads the
+  * ledger at version v, anti-joins the items already claimed, writes its
+  * wave once and publishes it conditional on the parent still being v. A
+  * lost race re-validates the written wave against only the claims that
+  * landed since v and republishes (see [[claim]]), so two dispatchers
+  * racing over the same queue files partition the items (no item is ever
+  * won twice; spec-asserted under a live thread race). Replay
+  * (foreachBatch is at-least-once) is the `tag`: a wave whose tag is
+  * already committed returns its ORIGINAL win set and appends nothing.
   *
   * State-lifecycle (round 15): claims are IN-FLIGHT state, not a
   * lifetime record. A dispatcher that finishes a wave moves its ids to
@@ -45,10 +46,14 @@ import graft.store.VersionedTable
   * that is a wave-sized slice of a lifetime-sized table.
   *
   * Trade-offs vs the lock-file path, stated honestly: claims are
-  * wave-atomic, so contending claimers serialize on the table CAS (fine
-  * for dispatcher-per-queue deployments, the streaming shape; the
-  * lock-file path remains the right tool for many independent workers
-  * claiming single items — `LedgerContentionProbe` puts numbers on the
+  * wave-atomic and every wave publishes through the one table-version
+  * CAS. A loser pays only for overlap — claims that landed meanwhile over
+  * a disjoint id range cost a manifest re-read and a republish, and only
+  * an overlapping range costs an anti-join against the landed files — but
+  * the publishes themselves still queue on one log (fine for
+  * dispatcher-per-queue deployments, the streaming shape; the lock-file
+  * path remains the right tool for many independent workers claiming
+  * single items — `LedgerContentionProbe` puts numbers on the
   * contention curve). Per-ITEM leases are not implemented here; crashed-
   * dispatcher recovery is per-WAVE: operator-driven [[release]] (the
   * `work-release` CLI verb) or the opt-in heartbeat [[takeoverStale]]
@@ -72,59 +77,137 @@ object WorkQueueLedger {
             if e.getMessage != null && e.getMessage.contains("already exists") =>
       }
 
-  /** Claim every id in `wantIds` (column `itemID`) not already claimed.
-    * Returns the win set (itemID rows, materialized). `tag` makes the wave
-    * idempotent: a replay returns the original wins without re-appending.
-    *
-    * A lost commit race re-reads, re-validates and retries with
-    * exponential backoff — UNBOUNDED by default (`maxRetries <= 0`): the
-    * conditional commit makes every retry safe, and a hard failure here
-    * would kill the streaming query and crash-loop it through checkpoint
-    * replay (ADVICE r14). Each losing attempt's materialized wave is
-    * freed eagerly so executor storage holds one wave, not the retry
-    * history.
-    */
-  /** Process-wide count of claim-commit CAS retries (lost races), for
+  /** Process-wide count of LOST claim CASes: every publish that found
+    * the ledger moved on counts once, whether the wave then republished
+    * unchanged (rebase) or was re-validated against what landed. For
     * probes and operability dashboards: contention between dispatchers
     * over one ledger shows up here long before it shows in throughput.
     */
   val claimRetries = new java.util.concurrent.atomic.LongAdder()
 
+  /** Claim every id in `wantIds` (column `itemID`) not already claimed.
+    * Returns the win set (itemID rows, materialized). `tag` makes the wave
+    * idempotent: a replay returns the original wins without re-appending.
+    *
+    * Work tracks what the claimer WINS, not what it is offered. The wave
+    * is computed once — anti-joined against the ledger at the head
+    * version v and cut with its count — written once
+    * ([[VersionedTable.writeFiles]]) and published as the child of exactly
+    * v ([[VersionedTable.publishIfVersion]]). A lost publish means some
+    * other commit landed, and ledger@head = ledger@v − removed + added,
+    * so the wave only needs re-validating against the files ADDED since
+    * v — manifest entries the snapshot cache already holds:
+    *  - none of their itemID footer ranges overlaps the wave's (a file
+    *    without stats counts as overlapping): the same files republish at
+    *    the new head — no Spark job, no rewrite;
+    *  - otherwise the wave is anti-joined against only those files, and
+    *    rewritten only if it actually lost ids.
+    * An empty wave writes no data file: it publishes a tag-only version,
+    * which claims nothing and so rebases freely.
+    *
+    * There is no backoff and no retry bound: every lost CAS means another
+    * commit landed, so the system as a whole always progresses, and a
+    * hard failure here would kill the streaming query and crash-loop it
+    * through checkpoint replay (ADVICE r14). A wave that loses ids frees
+    * its superseded materialization eagerly, so executor storage holds
+    * one wave, not the retry history.
+    */
   def claim(spark: SparkSession, root: String, wantIds: DataFrame,
-      instanceId: String, tag: String, maxRetries: Int = 0): DataFrame = {
+      instanceId: String, tag: String): DataFrame = {
     ensure(spark, root)
-    var tries = 0
-    while (maxRetries <= 0 || tries < maxRetries) {
-      val head = VersionedTable.snapshot(spark, root)
-      if (head.tags.contains(tag))
-        // replayed wave: its rows are already in the ledger, exactly once
-        return VersionedTable.read(spark, root)
-          .filter(col("tag") === tag).select("itemID")
-          .transform(graft.plans.Lineage.cut)
-      val ledger = VersionedTable.read(spark, root, Some(head.version))
-      // materialize the wave BEFORE the commit attempt: appendIfVersion
-      // writes `mine`'s rows to data files first, and a lazily-planned
-      // anti-join re-evaluated during the write must not see a newer
-      // ledger state than the version the commit is conditioned on
-      val mine = wantIds.select(col("itemID")).distinct()
-        .join(ledger.select("itemID"), Seq("itemID"), "left_anti")
+    var parent = VersionedTable.snapshot(spark, root)
+    if (parent.tags.contains(tag)) return replayed(spark, root, tag)
+    // materialized BEFORE the write: a lazily-planned anti-join
+    // re-evaluated during it must not see a newer ledger state than the
+    // version the publish is conditioned on
+    var (wave, n) = graft.plans.Lineage.cutCounted(
+      wantIds.select(col("itemID")).distinct()
+        .join(VersionedTable.read(spark, root, Some(parent.version))
+          .select("itemID"), Seq("itemID"), "left_anti")
         .select(col("itemID"), lit(instanceId).as("instanceID"),
           concat(lit(s"$tag-"), col("itemID")).as("lockID"),
-          lit(tag).as("tag"))
-        .transform(graft.plans.Lineage.cut)
-      if (VersionedTable.appendIfVersion(spark, root, mine,
-          head.version, Some(tag)))
-        return mine.select("itemID")
-      // lost the race: free this attempt's blocks, back off, re-validate
-      graft.plans.Lineage.free(mine)
+          lit(tag).as("tag")))
+    def write(at: VersionedTable.Snapshot) =
+      if (n == 0) Nil else VersionedTable.writeFiles(root, wave, at)
+    var files = write(parent)
+    while (!VersionedTable.publishIfVersion(spark, root, files, parent,
+        Some(tag))) {
       claimRetries.increment()
-      tries += 1
-      val pause = math.min(25L << math.min(tries, 6), 1000L)
-      Thread.sleep(pause +
-        java.util.concurrent.ThreadLocalRandom.current().nextLong(pause))
+      val head = VersionedTable.snapshot(spark, root)
+      if (head.tags.contains(tag)) {
+        // a concurrent replay of this same wave published first
+        graft.plans.Lineage.free(wave)
+        return replayed(spark, root, tag)
+      }
+      if (n > 0) {
+        val seen = parent.files.iterator.map(_.path).toSet
+        val range = idRange(files)
+        val landed = head.files.filter(fe =>
+          fe.rows > 0 && !seen(fe.path) && mayOverlap(fe, range))
+        if (landed.nonEmpty) {
+          val (rest, m) = graft.plans.Lineage.cutCounted(wave.join(
+            readIds(spark, root, landed.map(_.path)), Seq("itemID"),
+            "left_anti"))
+          if (m == n) graft.plans.Lineage.free(rest)
+          else {
+            graft.plans.Lineage.free(wave)
+            wave = rest; n = m
+            files = write(head)
+          }
+        }
+      }
+      parent = head
     }
-    sys.error(s"ledger claim lost the commit race $maxRetries times at $root")
+    if (n > 0) wave.select("itemID")
+    else {
+      graft.plans.Lineage.free(wave)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), IdSchema)
+    }
   }
+
+  private def replayed(spark: SparkSession, root: String,
+      tag: String): DataFrame =
+    // replayed wave: its rows are already in the ledger, exactly once
+    VersionedTable.read(spark, root)
+      .filter(col("tag") === tag).select("itemID")
+      .transform(graft.plans.Lineage.cut)
+
+  /** The wave's itemID range from its files' footer stats; None when a
+    * non-empty file carries none (every landed file then overlaps).
+    */
+  private def idRange(
+      files: Seq[VersionedTable.FileEntry]): Option[(String, String)] = {
+    val live = files.filter(_.rows > 0)
+    val mins = live.flatMap(_.mins.get("itemID"))
+    val maxs = live.flatMap(_.maxs.get("itemID"))
+    if (live.isEmpty || mins.size < live.size || maxs.size < live.size) None
+    else Some((mins.min(Utf8Order), maxs.max(Utf8Order)))
+  }
+
+  /** Could landed file `fe` hold an id in `range`? Stats-less either side
+    * counts as overlapping.
+    */
+  private def mayOverlap(fe: VersionedTable.FileEntry,
+      range: Option[(String, String)]): Boolean =
+    (range, fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
+      case (Some((lo, hi)), Some(mn), Some(mx)) =>
+        Utf8Order.lteq(mn, hi) && Utf8Order.lteq(lo, mx)
+      case _ => true
+    }
+
+  /** Parquet orders string footer stats by unsigned UTF-8 bytes, which
+    * `String.compareTo` (UTF-16 units) disagrees with beyond the BMP — a
+    * wrong "disjoint" verdict here would win an id twice.
+    */
+  private val Utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  private val IdSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("itemID",
+      org.apache.spark.sql.types.StringType)))
 
   /** Release a finished (or wedged) wave's claims. Fast path is
     * manifest-only: a wave's rows live in their own files with a constant
@@ -255,12 +338,7 @@ object WorkQueueLedger {
           hs.exists(graft.store.KeyBloom.mightContain(enc, _)))).map(_.path)
       }
     if (files.isEmpty) return wantIds
-    val done = spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(files.map(p => s"$doneRoot/$p"): _*)
-    wantIds.join(done, Seq("itemID"), "left_anti")
+    wantIds.join(readIds(spark, doneRoot, files), Seq("itemID"), "left_anti")
   }
 
   /** Done rows from the files of `ranged` whose footer range or per-file
@@ -277,13 +355,7 @@ object WorkQueueLedger {
       }) && fe.blooms.get("itemID").forall(enc =>
         hs.exists(graft.store.KeyBloom.mightContain(enc, _)))
     }.map(_.path)
-    if (files.isEmpty)
-      spark.range(0).select(lit("").as("itemID"))
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(files.map(p => s"$doneRoot/$p"): _*)
+    readIds(spark, doneRoot, files)
   }
 
   // --------------------------------------------------------- done digest
@@ -334,7 +406,7 @@ object WorkQueueLedger {
           val delta = snap.files.filterNot(f => d.files(f.path))
           val livePaths = delta.filter(_.rows > 0).map(_.path)
           if (livePaths.nonEmpty) {
-            val deltaBloom = readDone(spark, doneRoot, livePaths)
+            val deltaBloom = readIds(spark, doneRoot, livePaths)
               .stat.bloomFilter("itemID", d.expected, DigestFpp)
             d.bloom.mergeInPlace(deltaBloom)
             ()
@@ -350,21 +422,20 @@ object WorkQueueLedger {
           val bloom =
             if (livePaths.isEmpty)
               org.apache.spark.util.sketch.BloomFilter.create(expected, DigestFpp)
-            else readDone(spark, doneRoot, livePaths)
+            else readIds(spark, doneRoot, livePaths)
               .stat.bloomFilter("itemID", expected, DigestFpp)
           digests.put(doneRoot, Digest(snap.version, expected, paths, bloom))
           Some(bloom)
       }
     }
 
-  private def readDone(spark: SparkSession, doneRoot: String,
+  /** The itemID column of the listed data files of the ledger or done
+    * table at `root`.
+    */
+  private def readIds(spark: SparkSession, root: String,
       paths: Seq[String]): DataFrame =
     if (paths.isEmpty) spark.range(0).select(lit("").as("itemID"))
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("itemID",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(paths.map(p => s"$doneRoot/$p"): _*)
+    else spark.read.schema(IdSchema).parquet(paths.map(p => s"$root/$p"): _*)
 
   private[graft] def resetDigestCacheForTests(): Unit =
     digests.clear()
@@ -463,7 +534,7 @@ object WorkQueueLedger {
         finally in.close()
       } catch { case scala.util.control.NonFatal(_) => None }
     }
-    // beats exist but none parsed: a WRITER may be mid-flight (or the
+    // a beat that does not parse: a WRITER may be mid-flight (or the
     // bytes transiently garbled) — read as fresh-as-of-the-file-stamp and
     // let the bound decide. The pre-r17 code mapped this to Some(0L) =
     // "stale since epoch" and double-executed live waves; r17's first fix
@@ -474,14 +545,17 @@ object WorkQueueLedger {
     // is stamped before any byte is written; legacy suffix-less files
     // fall back to the filesystem mtime. A torn beat therefore reads
     // fresh exactly until the staleness bound elapses, then converges.
-    if (parsed.nonEmpty) Some(parsed.max)
-    else Some(files.map { s =>
+    // The newest stamp wins whether parsed or named: a beater mid-flight
+    // on its NEXT beat lists a torn new file beside its complete older
+    // one, and reading only the parsed content would call it stale.
+    val stamps = files.map { s =>
       val name = s.getPath.getName
       val suffix = name.drop(instanceId.length + 1)
       if (name.startsWith(instanceId + ".") && suffix.nonEmpty &&
           suffix.length < 19 && suffix.forall(_.isDigit)) suffix.toLong
       else s.getModificationTime
-    }.max)
+    }
+    Some((parsed ++ stamps).max)
   }
 
   /** Release every in-flight wave of instances whose heartbeat is stale

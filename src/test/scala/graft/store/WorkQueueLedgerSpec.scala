@@ -42,16 +42,20 @@ class WorkQueueLedgerSpec extends SparkSpec {
       "a replayed wave must not commit a new version")
   }
 
-  test("appendIfVersion: stale parent refused, fresh parent accepted") {
+  test("publishIfVersion: stale parent refused, fresh parent accepted") {
     val root = tmp()
     VersionedTable.create(spark, root, Seq(("x", 1L)).toDF("k", "v"))
-    val v1 = VersionedTable.latestVersion(spark, root).get
-    assert(VersionedTable.appendIfVersion(spark, root,
-      Seq(("y", 2L)).toDF("k", "v"), v1))
-    assert(!VersionedTable.appendIfVersion(spark, root,
-      Seq(("z", 3L)).toDF("k", "v"), v1),
+    val p1 = VersionedTable.snapshot(spark, root)
+    assert(VersionedTable.publishIfVersion(spark, root,
+      VersionedTable.writeFiles(root, Seq(("y", 2L)).toDF("k", "v"), p1), p1))
+    val z = VersionedTable.writeFiles(root, Seq(("z", 3L)).toDF("k", "v"), p1)
+    assert(!VersionedTable.publishIfVersion(spark, root, z, p1),
       "the parent advanced — the conditional commit must refuse, not rebase")
     assert(VersionedTable.read(spark, root).count() === 2)
+    // the refused files stay publishable as the child of the new head
+    assert(VersionedTable.publishIfVersion(spark, root, z,
+      VersionedTable.snapshot(spark, root)))
+    assert(VersionedTable.read(spark, root).count() === 3)
   }
 
   test("live race: two claimers over the same ids partition them exactly") {
@@ -70,8 +74,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(WorkQueueLedger.entries(spark, root).count() === 200)
   }
 
-  test("live race at 4 contenders: the unbounded backoff CAS still " +
-      "partitions every id exactly once") {
+  test("live race at 4 contenders: every id claimed exactly once") {
     val root = tmp()
     val all = (1 to 120).map(_.toString)
     import scala.concurrent.{Await, Future}
@@ -79,7 +82,7 @@ class WorkQueueLedgerSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     // overlapping (not identical) want-sets, so contenders both race on
     // shared ids AND carry exclusive ones — the realistic multi-queue
-    // overlap shape; unbounded retry (default) must converge, not throw
+    // overlap shape; the unbounded claim loop must converge, not throw
     val wants = Seq(
       all.take(80), all.slice(20, 100), all.slice(40, 120), all)
     val futs = wants.zipWithIndex.map { case (w, i) =>
@@ -125,6 +128,59 @@ class WorkQueueLedgerSpec extends SparkSpec {
       s"release wrote data files: ${after -- before}")
     assert(won(WorkQueueLedger.entries(spark, root).select("itemID")) ===
       Set("x", "y"))
+  }
+
+  private def txnDirs(root: String): Set[String] =
+    Option(new java.io.File(root, "data").list()).getOrElse(Array.empty)
+      .filter(_.startsWith("txn-")).toSet
+
+  test("live race over DISJOINT id ranges: lost CASes rebase without " +
+      "rewriting") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // no contender's id range overlaps another's, so every lost CAS must
+    // republish the files it already wrote: one txn dir per claimer.
+    // Rounds repeat until one of them actually lost a CAS.
+    var lost = 0L
+    var round = 0
+    while (lost == 0 && round < 5) {
+      val root = tmp()
+      // the ledger exists before the race (an empty claim writes no data)
+      WorkQueueLedger.claim(spark, root, ids(), "seed", "seed-0")
+      val before = txnDirs(root)
+      val wants = (0 until 4).map(i => (0 until 30).map(j => f"d$i-$j%03d"))
+      val retries0 = WorkQueueLedger.claimRetries.sum()
+      val futs = wants.zipWithIndex.map { case (w, i) =>
+        Future(won(WorkQueueLedger.claim(spark, root,
+          ids(w: _*), s"D$i", s"d$i-race-$round")))
+      }
+      val wins = futs.map(Await.result(_, Duration.Inf))
+      lost = WorkQueueLedger.claimRetries.sum() - retries0
+      assert(wins === wants.map(_.toSet), "each contender wins its own range")
+      assert(WorkQueueLedger.entries(spark, root).count() === 120)
+      assert((txnDirs(root) -- before).size === 4,
+        s"a rebase rewrote a wave: ${txnDirs(root) -- before} after $lost lost CASes")
+      round += 1
+    }
+    assert(lost > 0, s"no CAS was lost in $round racing rounds")
+  }
+
+  test("an all-held wave commits a tag-only version with no data file") {
+    val root = tmp()
+    WorkQueueLedger.claim(spark, root, ids("1", "2"), "A", "a-1")
+    val files0 = dataFiles(root)
+    val v0 = VersionedTable.latestVersion(spark, root).get
+    assert(won(WorkQueueLedger.claim(spark, root, ids("1", "2"), "B", "b-1"))
+      .isEmpty)
+    assert(VersionedTable.latestVersion(spark, root).get === v0 + 1)
+    assert(VersionedTable.snapshot(spark, root).tags.contains("b-1"))
+    assert(dataFiles(root) === files0, "an empty wave must write no data file")
+    // its replay returns empty and appends nothing
+    assert(won(WorkQueueLedger.claim(spark, root, ids("1", "2", "3"), "B",
+      "b-1")).isEmpty)
+    assert(VersionedTable.latestVersion(spark, root).get === v0 + 1)
+    assert(WorkQueueLedger.entries(spark, root).count() === 2)
   }
 
   test("releaseInstance hands back every wave a dead dispatcher holds") {
@@ -187,6 +243,45 @@ class WorkQueueLedgerSpec extends SparkSpec {
     // no lock files anywhere: the queue dir has no per-item locks
     assert(!new java.io.File(s"$queue/locks").exists() ||
       new java.io.File(s"$queue/locks").list().isEmpty)
+  }
+
+  test("a dispatcher that wins nothing commits only its batch marker, " +
+      "and a replay of that batch is skipped") {
+    import graft.exec.StreamingRunner
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledidle").toFile
+    val queue = new java.io.File(dir, "queue").toString
+    val results = new java.io.File(dir, "results").toString
+    val ledger = new java.io.File(dir, "ledger").toString
+    def rows(xs: String*) = xs.toSeq.toDF("itemID")
+      .selectExpr("itemID", "itemID AS taskID", "'todo' AS itemState",
+        "CAST(0 AS LONG) AS logLength", "CAST(null AS LONG) AS nestedTaskCount")
+    WorkQueueSource.append(rows("I1", "I2").coalesce(1), queue)
+    // another dispatcher holds every id of the batch
+    WorkQueueLedger.claim(spark, ledger, ids("I1", "I2"), "other", "other-batch-0")
+    def drain(ckpt: String): Unit = {
+      val q = StreamingRunner.ledgerDispatcher(
+          StreamingRunner.queueWorkItems(
+            StreamingRunner.queueStream(spark, queue)),
+          results, ledger, "idle")
+        .option("checkpointLocation", new java.io.File(dir, ckpt).toString)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(parquetFiles)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    drain("ckpt-1")
+    assert(new java.io.File(results, "_graft_commits/batch-idle-0").exists(),
+      "the empty batch must still land its commit marker")
+    assert(!dir.list().exists(_.endsWith(".staging")), "no staging dir")
+    assert(parquetFiles(new java.io.File(results)).isEmpty, "no outcome file")
+    // the holder releases, then batch 0 replays (a fresh checkpoint
+    // renumbers from 0): the marker must skip it, so nothing executes
+    WorkQueueLedger.release(spark, ledger, "other-batch-0")
+    drain("ckpt-2")
+    assert(parquetFiles(new java.io.File(results)).isEmpty,
+      "a replay of a committed empty batch must not claim or execute")
+    assert(WorkQueueLedger.entries(spark, ledger).count() === 0)
   }
 
   test("crash between claim wave and outcome commit: a STABLE-identity restart " +
@@ -581,6 +676,27 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
       "stall-1") === Seq("crashed"),
       "an empty beat file must not stall takeover forever")
+  }
+
+  test("a newer torn beat beside an older parsed one reads fresh") {
+    val root = tmp()
+    WorkQueueLedger.claim(spark, root, ids("N1"), "midbeat", "m-batch-0")
+    val hb = new java.io.File(new java.io.File(root), "_heartbeats")
+    hb.mkdirs()
+    // the beater's previous beat (complete, 120 s old) is still listed
+    // while its next beat file exists but holds no bytes yet: the newest
+    // stamp is the torn file's name, and the instance is alive
+    val old = System.currentTimeMillis() - 120000L
+    java.nio.file.Files.write(new java.io.File(hb, s"midbeat.$old").toPath,
+      old.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(
+      new java.io.File(hb, s"midbeat.${System.currentTimeMillis()}").toPath,
+      Array.empty[Byte])
+    assert(WorkQueueLedger.takeoverStale(spark, root, "taker", 60000L,
+      "midbeat-0").isEmpty,
+      "the older parsed beat must not outvote the newer torn one")
+    assert(won(WorkQueueLedger.entries(spark, root).select("itemID")) ===
+      Set("N1"))
   }
 
   test("dot-prefix sibling instances never cross-delete or cross-read " +
