@@ -322,17 +322,8 @@ object Main {
             }
             committedKey match {
               case Some(key) =>
-                // same retirable split as the dispatcher's replay path:
-                // terminal rows, plus todo rows with no claimable task
-                // left (budget-skipped rows stay out and re-open)
-                val todoRows = ItemStore.batchRows(spark, results, key, "todo")
-                val taskless = todoRows.select("itemID").join(
-                  graft.exec.Runner.todoTasks(todoRows).toDF
-                    .select("itemID").distinct(),
-                  Seq("itemID"), "left_anti")
                 WorkQueueLedger.markDone(spark, done,
-                  ItemStore.batchItemIds(spark, results, key,
-                    Seq("done", "Wall_Time_Exceeded")).unionByName(taskless), t)
+                  graft.exec.StreamingRunner.committedRetireIds(spark, results, key), t)
                 retired += 1
               case None => ()
             }

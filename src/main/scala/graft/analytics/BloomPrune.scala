@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Bloom-prefiltered anti/semi joins: make "subtract a huge key set" cheap
+/** Bloom-prefiltered anti-joins: make "subtract a huge key set" cheap
   * by shuffling only the rows that MIGHT match.
   *
   * The reference deletes items by looping `delete_item` over a Python id
   * list (`code/manager.py:744-781`, M10); the engine's scale form is an
-  * anti-join ([[graft.ops.Mutations.deleteItemsJoin]]). But a plain
-  * SortMergeJoin anti-join shuffles EVERY row of the big side — at 100 TB
-  * that is the whole table over the wire to drop 0.1% of it. The lakehouse
-  * fix (Spark's own runtime row-level filtering does the same internally):
+  * anti-join. But a plain SortMergeJoin anti-join shuffles EVERY row of
+  * the big side — at 100 TB that is the whole table over the wire to drop
+  * 0.1% of it. The lakehouse fix (Spark's own runtime row-level filtering
+  * does the same internally):
   *
   *  1. build a Bloom filter over the delete keys (one distributed
   *     `treeAggregate` via `DataFrameStatFunctions.bloomFilter`, a few MB
@@ -63,16 +63,6 @@ object BloomPrune {
     val candidates = big.filter(maybe)
       .join(del.select(col(delKey)), col(bigKey) === col(delKey), "left_anti")
     big.filter(!maybe).unionByName(candidates)
-  }
-
-  /** `big` restricted to rows whose `bigKey` appears in `del(delKey)` —
-    * bloom misses are definite drops, so only candidates join.
-    */
-  def bloomSemiJoin(big: DataFrame, bigKey: String, del: DataFrame,
-      delKey: String, expectedItems: Long = -1L, fpp: Double = 0.01): DataFrame = {
-    val maybe = mightContain(big, bigKey, del, delKey, expectedItems, fpp)
-    big.filter(maybe)
-      .join(del.select(col(delKey)), col(bigKey) === col(delKey), "left_semi")
   }
 
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")

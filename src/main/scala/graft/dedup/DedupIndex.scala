@@ -45,11 +45,9 @@ import graft.store.VersionedTable
   *    (df, gram) order with unseen grams at df 0 ([[Dedup.ppjoinBatchSide]])
   *    — the frequency table is never updated, so every doc ever indexed
   *    shares one global total order and the prefix/positional-filter
-  *    exactness lemmas keep holding as the index grows (the
-  *    [[graft.streaming.StreamingPpjoin]] argument, now applied to the base
-  *    index itself). Pair sets are identical to a full rebuild — both are
-  *    exact algorithms — though the candidate sets differ (rebuild re-ranks
-  *    by updated df).
+  *    exactness lemmas keep holding as the index grows. Pair sets are
+  *    identical to a full rebuild — both are exact algorithms — though the
+  *    candidate sets differ (rebuild re-ranks by updated df).
   *
   * Geometry is part of the artifact: `_meta.json` (AnnIndex pattern) pins
   * (bands, rowsPerBand) / threshold at build time and query/append paths

@@ -77,38 +77,4 @@ object LogRouter {
       .text(outDir)
     routed.filter(col("route").isin("dynamo", "dynamo_salvaged"))
   }
-
-  /** The streaming shape of X8 (SURVEY §7 hard-part: "three sinks in one
-    * foreachBatch with per-row routing"): every micro-batch is routed once,
-    * the filed tiers land in the partitioned gzip store, the inline tier in
-    * the item-log table — one pass, all sinks, per-row routing.
-    *
-    * Exactly-once under foreachBatch's at-least-once replay: every tier's
-    * rows land in a batch-owned partition (`batch=<id>`) via dynamic
-    * partition overwrite, so a replayed batch REPLACES its own partitions
-    * instead of appending a second copy — the same guarantee
-    * [[graft.store.ItemStore.commitBatch]] gives the dispatcher's outcome
-    * table, here for free from partition layout.
-    */
-  def streamSink(
-      logsStream: DataFrame,
-      payloadCol: String,
-      filedDir: String,
-      inlineDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    logsStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val routed = route(batch, payloadCol).cache()
-      try {
-        routed.filter(col("route").isin("cloudwatch", "s3"))
-          .select(col("route"), lit(batchId).as("batch"), col(payloadCol))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("route", "batch")
-          .option("compression", "gzip").text(filedDir)
-        routed.filter(col("route").isin("dynamo", "dynamo_salvaged"))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(inlineDir)
-      } finally { routed.unpersist(); () }
-    }
 }

@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.model.WorkItem
+import graft.model.{ItemState, WorkItem}
 import graft.store.ItemStore
 
-/** T1 — the reference's worker poll loop (`code/runner.py:144-238`) as a
-  * Structured Streaming dispatcher: `readStream` over the item-store path,
-  * each micro-batch of newly-appended items is claimed, executed and merged
-  * by the SAME batch `Runner` path, and the updated rows append to an
-  * outcome store. The reference's poll-sleep-refetch cycle (and its lock
-  * races) disappear: the stream IS the queue, each item arrives in exactly
-  * one micro-batch.
+/** T1 — the reference's worker poll loop (`code/runner.py:144-238`) as
+  * Structured Streaming dispatchers: `readStream` over the item store or a
+  * connector queue, each micro-batch of newly-appended items is claimed
+  * (per-wave ledger commits in [[ledgerDispatcher]], per-item lock files
+  * in [[claimedDispatcher]]), executed by the SAME batch `Runner` path,
+  * and its updated rows commit idempotently to an outcome store. The
+  * reference's poll-sleep-refetch cycle disappears: the stream IS the
+  * queue, each item arrives in exactly one micro-batch.
   */
 object StreamingRunner {
 
@@ -57,30 +58,6 @@ object StreamingRunner {
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
   }
-
-  /** foreachBatch dispatcher: run every todo item of the micro-batch,
-    * append updated items to `resultPath` (an ItemStore-shaped table whose
-    * latest row per itemID is the current state). The append is
-    * [[ItemStore.commitBatch]] keyed by `batchId` — foreachBatch is
-    * at-least-once (a crash after the write replays the batch on restart),
-    * and a blind append would record the replayed batch's outcomes twice;
-    * the idempotent commit makes the outcome table exactly-once. A batch
-    * already marked committed skips execution entirely (no re-run of its
-    * scripts either).
-    */
-  def dispatcher(
-      items: DataFrame,
-      resultPath: String,
-      config: Runner.RunConfig = Runner.RunConfig()): DataStreamWriter[org.apache.spark.sql.Row] =
-    items.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      if (!ItemStore.batchCommitted(batch.sparkSession, resultPath, batchId)) {
-        val (updated, outcomes) = Runner.processItems(batch, config)
-        try ItemStore.commitBatch(
-          updated.select(WorkItem.schema.fieldNames.map(col): _*), resultPath, batchId)
-        finally { outcomes.unpersist(); () }
-        ()
-      }
-    }
 
   /** [[claimedDispatcher]]'s claim step at LEDGER granularity — the
     * data-pipeline-scale variant (SCALE_PROBE.md round 14): claims are
@@ -166,7 +143,6 @@ object StreamingRunner {
       // results store all number their batches from 0, and an unscoped
       // key would make worker B's batch 0 look already-committed by A's
       val batchKey = s"$instanceId-$batchId"
-      val terminalStates = Seq("done", "Wall_Time_Exceeded")
       def retire(terminalIds: DataFrame): Unit = {
         WorkQueueLedger.markDone(spark, done, terminalIds, tag)
         WorkQueueLedger.release(spark, ledgerPath, tag)
@@ -205,22 +181,12 @@ object StreamingRunner {
       }
       if (ItemStore.batchCommitted(spark, resultPath, batchKey)) {
         // post-commit replay: outcomes are already exactly-once — finish
-        // retiring the wave if a crash interrupted markDone/release. The
-        // retirable split is recomputed from the committed batch's own
-        // files, so a replay retires exactly what the original would
-        // have: terminal-state rows, plus todo rows with no claimable
-        // task left (scriptless monitoring rows).
+        // retiring the wave if a crash interrupted markDone/release
         if (graft.store.VersionedTable.latestVersion(spark, ledgerPath).isDefined) {
           val wave = WorkQueueLedger.entries(spark, ledgerPath)
             .filter(col("tag") === tag).select("itemID")
-          if (!wave.isEmpty) {
-            val todoRows = ItemStore.batchRows(spark, resultPath, batchKey, "todo")
-            val taskless = todoRows.select("itemID").join(
-              Runner.todoTasks(todoRows).toDF.select("itemID").distinct(),
-              Seq("itemID"), "left_anti")
-            retire(ItemStore.batchItemIds(spark, resultPath, batchKey,
-              terminalStates).unionByName(taskless))
-          }
+          if (!wave.isEmpty)
+            retire(committedRetireIds(spark, resultPath, batchKey))
         }
         maintain()
       } else {
@@ -292,6 +258,23 @@ object StreamingRunner {
         maintain()
       }
     }
+
+  /** The ids an already-committed outcome batch `batchKey` retires,
+    * recomputed from that batch's own files so a crashed retirement
+    * finishes exactly as the original would have: terminal-state rows,
+    * plus todo rows with no claimable task left (scriptless monitoring
+    * rows). Budget-skipped rows stay out and re-open. Used by the
+    * [[ledgerDispatcher]] replay path and `work-release --results`.
+    */
+  def committedRetireIds(spark: SparkSession, resultPath: String,
+      batchKey: String): DataFrame = {
+    val todoRows = ItemStore.batchRows(spark, resultPath, batchKey, ItemState.Todo)
+    val taskless = todoRows.select("itemID").join(
+      Runner.todoTasks(todoRows).toDF.select("itemID").distinct(),
+      Seq("itemID"), "left_anti")
+    ItemStore.batchItemIds(spark, resultPath, batchKey,
+      Seq(ItemState.Done, ItemState.WallTimeExceeded)).unionByName(taskless)
+  }
 
   /** Cadence heartbeat period for the `work` verb's daemon beat (the
     * dispatcher also beats once per batch). `--takeover-after` bounds

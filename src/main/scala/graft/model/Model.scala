@@ -45,9 +45,6 @@ object ItemState {
 }
 
 object WorkItem {
-  /** Reference timestamp format `%d/%m/%Y-%H:%M:%S` (`code/modifier.py:78`). */
-  val DateFormat = "dd/MM/yyyy-HH:mm:ss"
-
   val nestedTaskType: StructType = StructType(Seq(
     StructField("status", StringType),
     StructField("script", StringType)))

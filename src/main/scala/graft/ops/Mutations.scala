@@ -18,9 +18,7 @@ import org.apache.spark.sql.functions._
   * affected `itemState` partitions ([[graft.store.ItemStore]]).
   *
   * All verbs take a row predicate instead of the reference's Python id
-  * lists; [[idPredicate]] builds the `isin` form, and for huge id sets use
-  * the DataFrame-join forms (e.g. [[deleteItemsJoin]]) — an `isin` with
-  * millions of literals doesn't scale, a broadcast anti-join does.
+  * lists.
   */
 object Mutations {
 
@@ -33,8 +31,6 @@ object Mutations {
     "log" -> map_from_entries(array().cast(
       "array<struct<key:string,value:struct<status:string,stdout:string,stderr:string>>>")),
     "logLength" -> lit(0L))
-
-  def idPredicate(ids: Seq[String]): Column = col("itemID").isin(ids: _*)
 
   /** Apply column updates to rows matching `pred`, evaluating `pred` against
     * the PRE-mutation row: the predicate is materialized once before any
@@ -187,10 +183,6 @@ object Mutations {
 
   /** M10 `delete_singleItem` / list variant (`code/manager.py:690-723`). */
   def deleteItems(items: DataFrame, pred: Column): DataFrame = items.filter(!pred)
-
-  /** M10 at scale: ids as a DataFrame (column `itemID`), broadcast anti-join. */
-  def deleteItemsJoin(items: DataFrame, ids: DataFrame): DataFrame =
-    items.join(broadcast(ids), Seq("itemID"), "left_anti")
 
   /** J2 log↔store reconciliation (`managing-item-logs.py:150-204`): upsert
     * incoming parsed-log rows into an existing table keyed by `keys`; the

@@ -174,8 +174,7 @@ object AnnIndex {
     * of the drop). Run appends and queries serialized (the daily-drop
     * deployment: ingest job, then query traffic), or put a
     * [[graft.store.VersionedTable]]-style pinned manifest in front when
-    * readers and appenders must overlap; [[startIngest]] inherits the same
-    * contract per micro-batch.
+    * readers and appenders must overlap.
     */
   def appendIvfPq(spark: SparkSession, dir: String, newVecs: DataFrame,
       idCol: String, vecCol: String, tag: String): Boolean = {
@@ -211,27 +210,6 @@ object AnnIndex {
     java.nio.file.Files.writeString(marker.toPath, "")
     true
   }
-
-  /** Streaming ingest: keep the index fresh as vectors arrive. Each
-    * micro-batch runs the exactly-once [[appendIvfPq]] under the
-    * `batch-<id>` tag, so foreachBatch's at-least-once replays are no-ops
-    * — the streaming twin of the daily-drop append, same machinery as
-    * [[graft.streaming.StreamingProfile]]. The index must already exist
-    * (built by a batch [[buildIvfPq]] over the seed corpus — streaming
-    * never retrains codebooks, per the IVF-PQ deployment contract).
-    */
-  def startIngest(stream: DataFrame, dir: String, checkpoint: String,
-      idCol: String, vecCol: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendIvfPq(batch.sparkSession, dir, batch, idCol, vecCol,
-          s"batch-$batchId")
-        ()
-      }
-      .start()
 
   private def delete(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(delete)

@@ -30,11 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object ProductQuantization {
 
-  /** Ascending-index L2² fold — oracle twin is `SimOracle.l2Sql`. */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** ADC grid: subspace distances are floored to 1e-6 before summing. */
   val DistGrid = 1000000.0
 
@@ -45,8 +40,8 @@ object ProductQuantization {
       lit(0L), (acc, x) => acc + x)
 
   /** Ascending-index L2² over a slice of `v` vs a full sub-centroid — the
-    * SAME fold as [[l2Sq]] over the sliced arrays (identical operands in
-    * identical order ⇒ bit-identical doubles).
+    * SAME left fold as the oracle's `SimOracle.l2Sql` over the sliced
+    * arrays (identical operands in identical order ⇒ bit-identical doubles).
     */
   private def l2SqSlice(v: Array[Double], off: Int, cv: Array[Double]): Double = {
     var acc = 0.0

@@ -22,7 +22,9 @@ object SimOracle {
     (1 to dims).map(d => s"${Similarity.planeNumerator(p, d)}/1000.0")
       .mkString("[", ", ", "]")
 
-  /** Ascending left-fold L2² — mirror of [[ProductQuantization.l2Sq]]. */
+  /** Ascending left-fold L2² — mirror of the JVM fold in
+    * `ProductQuantization.l2SqSlice`.
+    */
   def l2Sql(a: String, b: String): String =
     s"""list_reduce(list_prepend(0.0, list_transform(range(1, len($a) + 1),
        |  i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (da, dx) -> da + dx)""".stripMargin

@@ -672,36 +672,6 @@ object VersionedTable {
       .filter(col(key).cast("long") === value)
   }
 
-  /** String-key variants: the bloom probes [[KeyBloom.stringKey]] (the
-    * hash [[attachBlooms]] built string blooms with) and the range check
-    * compares the footer min/max strings lexically — URL / fingerprint /
-    * natural-key point reads without a surrogate id.
-    */
-  def candidateFilesString(spark: SparkSession, root: String, key: String,
-      value: String, version: Option[Long] = None): Seq[String] = {
-    val s = snapshot(spark, root, version)
-    val h = KeyBloom.stringKey(value)
-    s.files.filter { fe =>
-      val rangeHit = (fe.mins.get(key), fe.maxs.get(key)) match {
-        case (Some(mn), Some(mx)) => mn <= value && value <= mx
-        case _ => true
-      }
-      rangeHit && fe.blooms.get(key).forall(KeyBloom.mightContain(_, h))
-    }.map(_.path)
-  }
-
-  /** Point lookup by string key reading only [[candidateFilesString]]. */
-  def pointLookupString(spark: SparkSession, root: String, key: String,
-      value: String, version: Option[Long] = None): DataFrame = {
-    val s = snapshot(spark, root, version)
-    val files = candidateFilesString(spark, root, key, value, version)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-    else spark.read.schema(s.schema)
-      .parquet(files.map(p => s"$root/$p"): _*)
-      .filter(col(key) === value)
-  }
-
   /** Read version `version` (default: latest) as a DataFrame. */
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {

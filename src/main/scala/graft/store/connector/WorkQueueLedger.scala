@@ -195,15 +195,17 @@ object WorkQueueLedger {
       case _ => true
     }
 
-  /** Parquet orders string footer stats by unsigned UTF-8 bytes, which
-    * `String.compareTo` (UTF-16 units) disagrees with beyond the BMP — a
-    * wrong "disjoint" verdict here would win an id twice.
+  /** Parquet footer stats and Spark's string `min`/`max` order by unsigned
+    * UTF-8 bytes, which `String.compareTo` (UTF-16 units) disagrees with
+    * beyond the BMP — a wrong "disjoint" verdict here would win an id
+    * twice, and in [[notDone]] re-run a done id. Hot loops encode each
+    * string once with [[utf8]] and compare the bytes with [[BytesOrder]].
     */
-  private val Utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  private def utf8(s: String): Array[Byte] =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val BytesOrder: Ordering[Array[Byte]] =
+    (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b)
+  private val Utf8Order: Ordering[String] = BytesOrder.on[String](utf8)
 
   private val IdSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("itemID",
@@ -305,10 +307,11 @@ object WorkQueueLedger {
     val mm = want.agg(min(col("itemID")), max(col("itemID"))).head()
     if (mm.isNullAt(0)) return wantIds // empty or all-null wave
     val s = VersionedTable.snapshot(spark, doneRoot)
-    val (lo, hi) = (mm.getString(0), mm.getString(1))
+    val (lo, hi) = (utf8(mm.getString(0)), utf8(mm.getString(1)))
     val ranged = s.files.filter { fe =>
       fe.rows > 0 && ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) => mn <= hi && lo <= mx
+        case (Some(mn), Some(mx)) =>
+          BytesOrder.lteq(utf8(mn), hi) && BytesOrder.lteq(lo, utf8(mx))
         case _ => true // no stats: conservatively kept
       })
     }
@@ -348,9 +351,12 @@ object WorkQueueLedger {
       ranged: Seq[VersionedTable.FileEntry],
       ids: Array[String]): DataFrame = {
     val hs = ids.filter(_ != null).map(graft.store.KeyBloom.stringKey)
+    val keys = ids.filter(_ != null).map(utf8)
     val files = ranged.filter { fe =>
       ((fe.mins.get("itemID"), fe.maxs.get("itemID")) match {
-        case (Some(mn), Some(mx)) => ids.exists(id => mn <= id && id <= mx)
+        case (Some(mn), Some(mx)) =>
+          val (a, b) = (utf8(mn), utf8(mx))
+          keys.exists(k => BytesOrder.lteq(a, k) && BytesOrder.lteq(k, b))
         case _ => true
       }) && fe.blooms.get("itemID").forall(enc =>
         hs.exists(graft.store.KeyBloom.mightContain(enc, _)))

@@ -31,124 +31,6 @@ object Monitors {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"))
 
-  /** T5 + the watermark/window semantics the reference lacks: tumbling
-    * 1-hour event windows with 10-minute lateness tolerance, append mode —
-    * state is evicted once the watermark passes, so the monitor runs
-    * indefinitely with bounded memory.
-    */
-  def eventWindowCounts(eventsStream: DataFrame): DataFrame =
-    eventsStream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("total"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total"))
-
-  /** Watermarked stream-stream join: each purchase pairs with the same
-    * user's clicks in the preceding `horizon` — the live attribution twin
-    * of the batch as-of join (`Relational.asofPurchaseClick`), emitting ALL
-    * qualifying clicks (the batch op picks the latest; a stream cannot know
-    * "latest" until the watermark closes, so the join emits the candidate
-    * set and attribution picks downstream). BOTH sides carry watermarks and
-    * the join condition bounds event-time distance, so each side's buffered
-    * state is evicted once the watermark passes — without the time bound
-    * the state would grow with the full stream history.
-    */
-  def purchaseClickJoin(eventsStream: DataFrame,
-      horizon: String = "1 hour"): DataFrame = {
-    val purchases = eventsStream.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "0 seconds")
-    val clicks = eventsStream.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "0 seconds")
-    purchases.join(clicks,
-      purchases("user_id") === clicks("user_id") &&
-        col("c_ts") <= col("p_ts") &&
-        col("c_ts") >= col("p_ts") - expr(s"INTERVAL $horizon"),
-      "inner")
-      .select(purchases("user_id"), col("purchase_id"), col("click_id"))
-  }
-
-  /** Streaming exact dedup: first-seen-wins on the normalized-text
-    * fingerprint, with watermark-bounded state (fingerprints older than the
-    * lateness horizon are evicted — at 100 TB/day the dedup state would
-    * otherwise grow without bound). The streaming face of
-    * `Dedup.exactGroups`.
-    */
-  def streamingExactDedup(
-      docsStream: DataFrame, tsCol: String, textCol: String,
-      lateness: String = "1 hour"): DataFrame =
-    docsStream
-      .withColumn("fp", md5(graft.text.TextAnalysis.normalized(col(textCol))))
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark("fp")
-
-  /** The streaming face of the corpus-prep ingest: PII scrub + repetition
-    * rule (both stateless narrow projections — they stream trivially) +
-    * first-seen exact dedup with watermark-bounded state. A live pipeline
-    * runs THIS on arriving documents and leaves the batch-global stages
-    * (near-dup clustering, decontamination, mixture, split) to the daily
-    * `dedupAgainst`/`prepareCorpus` pass over the accumulated store — the
-    * standard lambda split: per-event hygiene in-stream, corpus-global
-    * decisions in batch.
-    *
-    * The repetition rule here is the tokens-only form (distinct-token
-    * ratio + top-token mass): per-doc, stateless, identical verdict to the
-    * batch `repetitionMetrics` token columns. The bigram statistic needs
-    * the explode→aggregate chain and is left to the batch filter.
-    */
-  def streamingPrepare(docsStream: DataFrame, tsCol: String, idCol: String,
-      textCol: String, lateness: String = "1 hour",
-      minDistinctRatio: Double = 0.35,
-      maxTopTokenFrac: Double = 0.5): DataFrame = {
-    val toks = split(graft.text.TextAnalysis.normalized(col(textCol)), " ")
-    val scrubbed = docsStream
-      .withColumn(textCol, graft.pipeline.Pipeline.redactText(col(textCol)))
-      .withColumn("__n", size(toks).cast("long"))
-      .withColumn("__distinct", size(array_distinct(toks)).cast("long"))
-      .withColumn("__max", array_max(
-        transform(array_distinct(toks),
-          t => size(filter(toks, x => x === t)).cast("long"))))
-      .filter(col("__distinct") / col("__n") >= minDistinctRatio &&
-        col("__max") / col("__n") <= maxTopTokenFrac)
-      .drop("__n", "__distinct", "__max")
-    streamingExactDedup(scrubbed, tsCol, textCol, lateness)
-  }
-
-  /** Approximate streaming NEAR-dedup (the streaming face of
-    * `Dedup.lshCandidates`): each incoming doc claims its MinHash band
-    * buckets; `dropDuplicatesWithinWatermark` keeps only the FIRST claim of
-    * each bucket, with state bounded by the watermark horizon. A doc that
-    * claims strictly fewer buckets than it has bands collided with an
-    * earlier doc in ≥1 band — the LSH near-dup signal. Identical docs share
-    * every band key, so exactly one member of an exact-dup cluster claims
-    * all its buckets (spec-asserted); near-dups are flagged with the same
-    * band-collision probability as the batch pipeline. Returns the claim
-    * stream `(doc id, ts, bandKey)`; per-doc verdicts aggregate downstream
-    * (claims == bands → novel).
-    */
-  def streamingBandClaims(
-      docsStream: DataFrame, tsCol: String, idCol: String, textCol: String,
-      bands: Int = 6, rowsPerBand: Int = 2,
-      lateness: String = "1 hour"): DataFrame = {
-    import org.apache.spark.sql.functions.{array, concat_ws, explode, lit, slice}
-    val sigs = graft.dedup.Dedup.minhashSigsUdf(bands * rowsPerBand)(
-      graft.dedup.Dedup.distinctNgramsUdf(3)(
-        graft.text.TextAnalysis.normalized(col(textCol))))
-    val bandKeys = (0 until bands).map { j =>
-      concat_ws(":", lit(j) +: (0 until rowsPerBand).map(r =>
-        element_at(col("__sigs"), j * rowsPerBand + r + 1)): _*)
-    }
-    docsStream
-      .withColumn("__sigs", sigs)
-      .select(col(idCol), col(tsCol), explode(array(bandKeys: _*)).as("bandKey"))
-      .withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark("bandKey")
-  }
-
   /** Open the item table as a stream (file source over the store path). */
   def itemStream(spark: SparkSession, path: String): DataFrame =
     spark.readStream.schema(WorkItem.schema).parquet(path)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** Inverted-index build and conjunctive keyword search over `documents` —
+/** Conjunctive keyword and BM25 search over `documents` —
   * the text-retrieval surface a corpus engine needs next to fuzzy dedup and
   * salient terms (the reference has no search; its only text access is
   * whole-value log salvage, `/root/reference/code/logSalvager.py`).
@@ -20,20 +20,6 @@ object Search {
   /** Query used by the gate: three common corpus terms, conjunctive. */
   val GateTerms: Seq[String] = Seq("hash", "join", "scan")
   val GateK = 20
-
-  /** The inverted index as data: one row per (term, doc_id) posting with
-    * its term frequency. ONE shuffle on (term, doc_id); at 100 TB this is
-    * the thing you'd write bucketed by term so searches are
-    * shuffle-free scans of a few buckets.
-    */
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.normalized(col(textCol)).as("ntext"))
-      .filter(col("ntext").isNotNull && col("ntext") =!= "")
-      .select(col("doc_id"), explode(split(col("ntext"), " ")).as("term"))
-      .groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"))
 
   /** Conjunctive (AND) keyword search: documents containing EVERY query
     * term, ranked by total query-term frequency (desc, doc_id tiebreak),
@@ -96,8 +82,8 @@ object Search {
     * stream to query-term postings BEFORE its (doc_id, term) exchange, so
     * the big shuffle carries ~|terms|/|vocab| of the corpus; df and the
     * global (N, total-token) stats are one-row/TINY broadcasts; the final
-    * top-k is TakeOrderedAndProject — no global sort. With the inverted
-    * index pre-built and bucketed by term ([[invertedIndex]]), the whole
+    * top-k is TakeOrderedAndProject — no global sort. With a (term,
+    * doc_id, tf) posting table pre-built and bucketed by term, the whole
     * query becomes a few bucket scans.
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,

@@ -13,12 +13,17 @@ object GraftProps extends Properties("graft") {
 
   property("charHash stays in [0, 2^31-1) for any string") =
     forAll { (s: String) =>
-      val h = Dedup.charHashJvm(s)
+      val h = Similarity.charHash(s)
       h >= 0L && h < Dedup.HashMod
     }
 
+  // the fold evaluated in exact integers, the form the DuckDB oracle mirrors
   property("charHash agrees with the Similarity plane-seed hash") =
-    forAll { (s: String) => Dedup.charHashJvm(s) == Similarity.charHash(s) }
+    forAll { (s: String) =>
+      val exact = s.codePoints.toArray.foldLeft(BigInt(0))(
+        (acc, cp) => (acc * 31 + cp) % BigInt(Dedup.HashMod))
+      BigInt(Similarity.charHash(s)) == exact
+    }
 
   property("plane numerators bounded and deterministic") =
     forAll(Gen.choose(0, 64), Gen.choose(1, 128)) { (p, d) =>

@@ -18,14 +18,6 @@ class BloomPruneSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  test("bloomSemiJoin is exact and null keys never pass") {
-    val big = Seq(Some(1L), Some(2L), None, Some(3L)).toDF("k")
-    val del = Seq(2L, 3L, 4L).toDF("dk")
-    val got = BloomPrune.bloomSemiJoin(big, "k", del, "dk")
-      .as[Option[Long]].collect().toSeq.flatten.sorted
-    assert(got === Seq(2L, 3L))
-  }
-
   test("string keys route through the string probe") {
     val big = Seq("a", "b", "c", "d").toDF("k")
     val del = Seq("b", "d", "e").toDF("dk")

@@ -19,10 +19,11 @@ class StreamingRunnerSpec extends SparkSpec {
     w.close()
     val store = dir.toPath.resolve("store").toString
     val results = dir.toPath.resolve("results").toString
+    val registry = dir.toPath.resolve("registry").toString
     ItemStore.save(Importer.importFile(spark, f.getAbsolutePath, "|", Some(",")), store)
 
-    val q = StreamingRunner.dispatcher(
-      StreamingRunner.itemStream(spark, store), results)
+    val q = StreamingRunner.claimedDispatcher(
+      StreamingRunner.itemStream(spark, store), results, registry, "worker-A")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", dir.toPath.resolve("ckpt").toString)
       .start()
@@ -133,10 +134,11 @@ class StreamingRunnerSpec extends SparkSpec {
     w.close()
     val store = dir.toPath.resolve("store").toString
     val results = dir.toPath.resolve("results").toString
+    val registry = dir.toPath.resolve("registry").toString
     ItemStore.save(Importer.importFile(spark, f.getAbsolutePath, "|", Some(",")), store)
 
-    val q = StreamingRunner.dispatcher(
-      StreamingRunner.itemStream(spark, store), results)
+    val q = StreamingRunner.claimedDispatcher(
+      StreamingRunner.itemStream(spark, store), results, registry, "worker-A")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", dir.toPath.resolve("ckpt").toString)
       .start()
@@ -145,12 +147,14 @@ class StreamingRunnerSpec extends SparkSpec {
 
     // simulate the at-least-once replay foreachBatch performs after a
     // crash between the outcome write and the checkpoint commit: invoke the
-    // same micro-batch body again with the same batchId
+    // same micro-batch body again with the same batch key (instance-scoped
+    // batch 0)
     val replayed = ItemStore.load(spark, store)
-    if (!ItemStore.batchCommitted(spark, results, 0L)) {
+    if (!ItemStore.batchCommitted(spark, results, "worker-A-0")) {
       val (updated, outcomes) = Runner.processItems(replayed)
       try ItemStore.commitBatch(
-        updated.select(graft.model.WorkItem.schema.fieldNames.map(col): _*), results, 0L)
+        updated.select(graft.model.WorkItem.schema.fieldNames.map(col): _*), results,
+        "worker-A-0")
       finally { outcomes.unpersist(); () }
     }
     val out = ItemStore.load(spark, results)

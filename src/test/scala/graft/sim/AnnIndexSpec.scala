@@ -101,18 +101,11 @@ class AnnIndexSpec extends SparkSpec {
     val dayA = vecs.filter($"vec_id" % 2 === 0)
     val dayB = vecs.filter($"vec_id" % 2 === 1)
     AnnIndex.buildIvfPq(dayA, "vec_id", "v", dir, Dims, M, Ksub, Iters, Nlist)
-    // stream day-B as two parquet files -> two micro-batches
-    val src = base.resolve("src").toString
-    dayB.filter($"vec_id" % 4 === 1).write.parquet(src)
-    val q = AnnIndex.startIngest(
-      spark.readStream.schema(dayB.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      dir, base.resolve("ckpt").toString, "vec_id", "v")
-    try {
-      q.processAllAvailable()
-      dayB.filter($"vec_id" % 4 === 3).write.mode("append").parquet(src)
-      q.processAllAvailable()
-    } finally q.stop()
+    // day-B in two micro-batch-sized appends, each under its batch tag
+    Seq(1, 3).foreach { r =>
+      AnnIndex.appendIvfPq(spark, dir, dayB.filter($"vec_id" % 4 === r),
+        "vec_id", "v", s"batch-$r")
+    }
     val streamed = AnnIndex.load(spark, dir)
     assert(streamed.codes.count() === vecs.count())
     // reference: the same day-B appended in ONE exactly-once drop

@@ -35,7 +35,8 @@ class FormatsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-fmt-conv")
     val ev = graft.Tables.events(spark, sf0001).drop("props")
     Formats.write(ev, s"$dir/orc", "orc")
-    Formats.convert(spark, s"$dir/orc", "orc", s"$dir/json", "json", ev.schema)
+    Formats.write(Formats.read(spark, s"$dir/orc", "orc", ev.schema),
+      s"$dir/json", "json")
     val back = Formats.read(spark, s"$dir/json", "json", ev.schema)
     assert(back.schema === ev.schema)
     assert(back.count() === ev.count())

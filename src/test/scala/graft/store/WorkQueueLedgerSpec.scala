@@ -213,6 +213,28 @@ class WorkQueueLedgerSpec extends SparkSpec {
     assert(won(WorkQueueLedger.notDone(spark, root, ids("zz"))) === Set("zz"))
   }
 
+  // U+FF01 sorts after U+1F600 in UTF-16 units but before it in UTF-8
+  // bytes, the order of parquet footer stats and of Spark's min/max
+  private val Fullwidth = "！"
+  private val Emoji = "😀"
+
+  test("notDone range check uses UTF-8 byte order: a done id inside the " +
+      "wave's byte range is not re-offered") {
+    val root = tmp() + "-done"
+    WorkQueueLedger.markDone(spark, root, ids(Fullwidth), "w-0")
+    assert(won(WorkQueueLedger.notDone(spark, root, ids(Fullwidth, Emoji))) ===
+      Set(Emoji))
+  }
+
+  test("notDone suspect read uses UTF-8 byte order: a done file whose " +
+      "byte range holds a suspect is read") {
+    val root = tmp() + "-done"
+    // one file holding both ids: footer range [U+FF01, U+1F600] in bytes
+    WorkQueueLedger.markDone(spark, root, ids(Fullwidth, Emoji).coalesce(1), "w-0")
+    assert(won(WorkQueueLedger.notDone(spark, root, ids("a", Fullwidth))) ===
+      Set("a"))
+  }
+
   test("ledgerDispatcher end-to-end over a connector queue: exactly-once outcomes") {
     import graft.exec.StreamingRunner
     val dir = java.nio.file.Files.createTempDirectory("graft-leddisp").toFile

@@ -81,26 +81,4 @@ class MonitorsSpec extends SparkSpec {
     val after = Monitors.history(spark, hist)
     assert(after.select($"iteration_id").distinct().count() >= 2)
   }
-
-  test("windowed event counts with watermark run append-mode (T5)") {
-    val raw = eventsStream("graft-events")
-    val q = Monitors.runToMemory(
-      Monitors.eventWindowCounts(raw), "event_windows", "append")
-    try {
-      // append mode only emits closed windows; with AvailableNow the final
-      // watermark closes all but the last -> compare against batch minus max window
-      val streamed = spark.table("event_windows")
-        .select($"window_start", $"event_type", $"n").as[(java.sql.Timestamp, String, Long)]
-        .collect().map { case (w, t, n) => (w.toString, t) -> n }.toMap
-      val ev = graft.Tables.events(spark, sf0001)
-      val maxWindow = ev.select(date_trunc("hour", max($"ts"))).as[java.sql.Timestamp].head()
-      val batch = ev.filter(date_trunc("hour", $"ts") < maxWindow)
-        .groupBy(date_trunc("hour", $"ts").as("w"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .as[(java.sql.Timestamp, String, Long)]
-        .collect().map { case (w, t, n) => (w.toString, t) -> n }.toMap
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
-  }
 }

@@ -31,35 +31,4 @@ class StreamEnrichSpec extends SparkSpec {
       assert(streamed.nonEmpty && streamed === batch)
     } finally q.stop()
   }
-
-  test("watermarked stream-stream join matches the batch interval join") {
-    val raw = eventsStream("graft-ssj")
-    val q = Monitors.runToMemory(
-      Monitors.purchaseClickJoin(raw, "24 hours"), "ssj", "append")
-    try {
-      val streamed = spark.table("ssj")
-        .as[(Long, Long, Long)].collect().toSet
-      val ev = graft.Tables.events(spark, sf0001)
-      val p = ev.filter($"event_type" === "purchase")
-        .select($"user_id", $"event_id".as("purchase_id"), $"ts".as("p_ts"))
-      val c = ev.filter($"event_type" === "click")
-        .select($"user_id".as("c_uid"), $"event_id".as("click_id"), $"ts".as("c_ts"))
-      val batch = p.join(c, $"user_id" === $"c_uid" &&
-          $"c_ts" <= $"p_ts" && $"c_ts" >= $"p_ts" - expr("INTERVAL 24 hours"))
-        .select($"user_id", $"purchase_id", $"click_id")
-        .as[(Long, Long, Long)].collect().toSet
-      assert(streamed.nonEmpty)
-      // with AvailableNow the final watermark may hold back joins whose
-      // eviction horizon is still open — the emitted set must be exactly
-      // the batch pairs whose purchase closed under the final watermark
-      assert(streamed.subsetOf(batch))
-      val maxTs = ev.select(max(unix_micros($"ts"))).as[Long].head()
-      val horizonUs = 24L * 3600 * 1000000
-      val closed = p.filter(unix_micros($"p_ts") + horizonUs < maxTs)
-        .select($"purchase_id").as[Long].collect().toSet
-      val streamedPurchases = streamed.map(_._2)
-      assert(closed.intersect(batch.map(_._2)).subsetOf(streamedPurchases),
-        "a closed purchase's joins were not emitted")
-    } finally q.stop()
-  }
 }

@@ -30,30 +30,6 @@ class VersionedSinkSpec extends SparkSpec {
     assert(VersionedTable.read(spark, root).count() === 3)
   }
 
-  test("streaming ingest commits one tagged version per micro-batch") {
-    val src = Files.createTempDirectory("graft-vsink-src").toString + "/src"
-    val root = Files.createTempDirectory("graft-vsink-tbl").toString + "/t"
-    val ckpt = Files.createTempDirectory("graft-vsink-ck").toString
-    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(src)
-
-    val q = VersionedSink.start(
-      spark.readStream.schema("k long, s string").parquet(src), root, ckpt)
-    try q.processAllAvailable() finally q.stop()
-
-    assert(VersionedTable.read(spark, root).orderBy("k")
-      .as[(Long, String)].collect().toSeq === Seq((1L, "a"), (2L, "b")))
-    val snap = VersionedTable.snapshot(spark, root)
-    assert(snap.tags.forall(_.startsWith("batch-")))
-    assert(snap.tags.nonEmpty)
-
-    // restart over the same checkpoint: no new data -> no new version
-    val vBefore = snap.version
-    val q2 = VersionedSink.start(
-      spark.readStream.schema("k long, s string").parquet(src), root, ckpt)
-    try q2.processAllAvailable() finally q2.stop()
-    assert(VersionedTable.snapshot(spark, root).version === vBefore)
-  }
-
   test("mergeSchema append widens; strict append refuses type conflicts") {
     val root = Files.createTempDirectory("graft-vsink-ev").toString + "/t"
     VersionedTable.create(spark, root, Seq((1L, "a")).toDF("k", "s"))

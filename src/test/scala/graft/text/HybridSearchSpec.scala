@@ -35,20 +35,6 @@ class HybridSearchSpec extends SparkSpec {
     assert(got === Seq((1L, 5L, q(3)), (2L, 7L, q(3))))
   }
 
-  test("fuseRrfWeighted generalizes fuseRrf: unit weights agree, weights scale") {
-    val lex = Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "rank")
-    val vec = Seq((2L, 1L), (3L, 2L)).toDF("doc_id", "rank")
-    val two = HybridSearch.fuseRrf(lex, vec, 10)
-      .select("doc_id", "rrf_q").as[(Long, Long)].collect().toMap
-    val n = HybridSearch.fuseRrfWeighted(Seq(lex -> 1L, vec -> 1L), 10)
-      .select("doc_id", "rrf_q").as[(Long, Long)].collect().toMap
-    assert(n === two)
-    // doubling one list's weight doubles exactly its contributions
-    val w = HybridSearch.fuseRrfWeighted(Seq(lex -> 2L, vec -> 1L), 10)
-      .select("doc_id", "rrf_q").as[(Long, Long)].collect().toMap
-    assert(w(1L) === 2 * q(1) && w(2L) === 2 * q(2) + q(1) && w(3L) === q(2))
-  }
-
   test("hybrid gate returns a full ranked page with both modalities present") {
     val fn = HybridSearch.queries("txt_hybrid_rrf")
     val rows = fn(spark, sf0001)

@@ -32,14 +32,6 @@ class SearchSpec extends SparkSpec {
     assert(out.map(_._2).toSeq === Seq(30L, 29L, 28L, 27L, 26L))
   }
 
-  test("invertedIndex emits one posting per (term, doc) with exact tf") {
-    val idx = Search.invertedIndex(docs, "doc_id", "text")
-      .as[(String, Long, Long)].collect().toSet
-    assert(idx.contains(("alpha", 1L, 2L)))
-    assert(idx.contains(("gamma", 3L, 2L)))
-    assert(!idx.exists(_._2 == 6L), "null text must produce no postings")
-  }
-
   test("bm25TopK is disjunctive, ranks by summed contributions, exact grid values") {
     val out = Search.bm25TopK(docs, "doc_id", "text", Seq("alpha", "gamma"), 10)
       .as[(Long, Long, Long)].collect().toSeq
